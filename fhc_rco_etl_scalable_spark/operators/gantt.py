@@ -240,22 +240,6 @@ def gantt_analysis(
     the non-constraint output for single-constraint lines
     (machine_level.py:364-375).
     """
-    from ..session import fast_planning
-
-    with fast_planning(line_dt):
-        return _gantt_analysis_impl(
-            co_agg, co_event_log, machine_dt, line_dt, line_dt_full, server
-        )
-
-
-def _gantt_analysis_impl(
-    co_agg: DataFrame,
-    co_event_log: DataFrame,
-    machine_dt: DataFrame,
-    line_dt: DataFrame,
-    line_dt_full: DataFrame,
-    server: str,
-) -> tuple[DataFrame, DataFrame]:
     # Number of constraints = distinct constraint machines per line
     # (A2; machine_level.py:24-25).
     n_constraints = line_dt.groupBy("LINE").agg(

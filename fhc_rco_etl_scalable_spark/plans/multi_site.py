@@ -105,16 +105,17 @@ def incremental_site_loader(
 
     from ..schemas import OUTPUT_SCHEMAS, dynamic_output_schema
 
-    # The sink's read-modify-swap on a shared table directory is not
-    # safe under run_all_sites' thread pool (two sites loading the same
-    # table would each stage against the same pre-state and one swap
-    # would win). Commits are serialized — but each output is
-    # MATERIALIZED (localCheckpoint) before the lock is taken, so the
-    # site's heavy compute runs with full cluster parallelism outside
-    # the critical section and the sink's multiple actions per table
-    # (key collect + write) read the checkpointed result instead of
-    # re-running the site DAG each time. (Delta/Iceberg replace this
-    # lock with optimistic transactional commits.)
+    # Every sink write is read-modify-commit through the sink's one
+    # commit path: it reads the current snapshot, writes the next one
+    # and flips the version pointer. Two sites loading the same table
+    # would both build on the same snapshot; the second pointer flip
+    # then fails as a concurrent commit. So loads are serialized — but
+    # each output is MATERIALIZED (localCheckpoint) before the lock is
+    # taken, so the site's heavy compute runs with full cluster
+    # parallelism outside the critical section and the sink's actions
+    # per table (key collect + write) read the checkpointed result
+    # instead of re-running the site DAG each time. (Delta/Iceberg
+    # replace this lock with optimistic transactional commits.)
     lock = threading.Lock()
 
     def load(server: str, outputs: dict[str, DataFrame]) -> None:

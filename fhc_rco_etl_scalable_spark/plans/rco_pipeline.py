@@ -32,9 +32,6 @@ from ..operators.sessionize import (
 )
 
 
-from ..session import fast_planning
-
-
 @dataclass
 class SiteParams:
     """Per-site knobs (reference site_config, App/rco_main.py:95-106)."""
@@ -422,15 +419,6 @@ def mes_etl(
     # (line_dt / line_dt_full) are deliberately NOT checkpointed —
     # at 100 TB a parquet re-scan with pushdown is cheaper than
     # caching the full log.
-    with fast_planning(line_dt):
-        return _mes_etl_impl(line_dt, line_dt_full, site)
-
-
-def _mes_etl_impl(
-    line_dt: DataFrame,
-    line_dt_full: DataFrame,
-    site: SiteParams,
-) -> dict[str, DataFrame]:
     co_events = detect_changeovers(line_dt, site).localCheckpoint(eager=False)
     # aggregate_changeovers carries __first_uptime (first event's UPTIME
     # per session) for the A9 backfill — one window pass, no extra join.

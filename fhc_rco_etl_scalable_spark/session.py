@@ -87,32 +87,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def fast_planning(df):
-    """Context manager: disable Catalyst constraint propagation while
-    CONSTRUCTING a deep pipeline plan (the lazy-checkpoint subtree
-    planning inside mes_etl/gantt). On those window-heavy trees the
-    rule's cost is quadratic in predicate count and adds ~1 s of pure
-    driver CPU per pipeline build at ANY data scale; its benefit —
-    inferred isnotnull pushdowns — is redundant there because the
-    pipelines filter their join/partition keys explicitly. Scoped to
-    construction only: optimization at action time runs with the
-    session default."""
-    import contextlib
-
-    spark = df.sparkSession
-
-    @contextlib.contextmanager
-    def cm():
-        key = "spark.sql.constraintPropagation.enabled"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return cm()

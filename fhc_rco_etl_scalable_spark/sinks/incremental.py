@@ -19,10 +19,12 @@ transaction log and Iceberg's metadata pointer implement):
         _version.json     # {"version": N} — the ONLY mutable file
         v000001/ ...      # immutable data snapshots (flat or hive)
 
-Every write materializes the next snapshot ``v{N+1}`` completely —
-hard-linking the files of untouched partitions from ``v{N}`` (no data
-copy, same inodes) and writing only the touched partitions fresh —
-then commits by atomically replacing ``_version.json``. Readers
+Every writer goes through ONE commit path, ``_atomic_write``: claim a
+private ``.stage-*`` dir and the next version ``v{N+1}``, write the
+new files into the stage, hard-link the files it keeps from ``v{N}``
+(no data copy, same inodes), store the schema sidecar, rename the
+stage onto ``v{N+1}`` and commit by atomically replacing
+``_version.json``. A write that fails removes its stage. Readers
 resolve the pointer and scan one immutable snapshot, so a reader
 concurrent with a load sees either the old table or the new table,
 never a mix (snapshot isolation; property-tested by
@@ -30,18 +32,23 @@ tests/test_incremental.py::test_concurrent_reader_sees_single_version).
 Crash recovery is trivial by construction: a crash before the pointer
 flip leaves an orphan ``v{M}`` (M > pointer) that the next write
 garbage-collects; a crash after the flip is already committed. There
-is no partially-swapped state to roll back — this closes the round-4
-advice item on `_recover` leaving staged-only partitions behind.
+is no partially-swapped state to roll back.
 
-``delete_overlap_append`` tables are hive-partitioned by the
-delete-scope key (default ``LINE``/``Server``) and a load rewrites
-ONLY the partition directories whose keys appear in the batch (the
-``replaceWhere`` pattern) — survivors for those keys are read with a
-partition-pruned scan, unioned with the batch, and land in the new
-snapshot next to hard-links of every untouched partition. Write
-amplification is O(batch partitions), not O(table). Small state
-tables (brandcode master, Script_Data) snapshot whole — they are tiny
-by construction.
+The writers differ only in what they hand that path:
+
+* appends (``append_aligned``, ``foreach_batch_appender``) write the
+  batch and link every file of ``v{N}``;
+* ``delete_overlap_append`` tables are hive-partitioned by the
+  delete-scope key (default ``LINE``/``Server``). A load writes ONLY
+  the partitions whose keys appear in the batch (the ``replaceWhere``
+  pattern) and links every other one. The batch's keys are one flat
+  ``IN`` over a struct of the partition columns, which Catalyst turns
+  into a partition filter, so the survivors come from a
+  partition-pruned scan. Write amplification is O(batch partitions),
+  not O(table);
+* the small state tables (brandcode master, Script_Data), rollups,
+  SCD2 dimensions and ``compact`` rewrite the whole snapshot — they are
+  tiny by construction, or rewriting everything is the point.
 
 Idempotence invariant (property-tested): loading the same window twice
 yields byte-identical tables.
@@ -101,7 +108,9 @@ def lookback_start(now: datetime, watermark: datetime | None) -> datetime:
 
 def _link_tree(src: str, dst: str, skip_rels: set[str] | None = None) -> None:
     """Recursively hard-link every file under ``src`` into ``dst``,
-    skipping any subtree whose src-relative path is in ``skip_rels``.
+    skipping any subtree whose src-relative path is in ``skip_rels``
+    and any file ``dst`` already has (Spark's ``_SUCCESS`` marker is
+    the only name a fresh write shares with a snapshot).
     Hard links preserve inodes — untouched partitions in a new
     snapshot are literally the same file bytes on disk."""
     skip = skip_rels or set()
@@ -116,7 +125,10 @@ def _link_tree(src: str, dst: str, skip_rels: set[str] | None = None) -> None:
             if os.path.isdir(sub):
                 walk(sub, r)
             elif r not in skip:
-                os.link(sub, os.path.join(dst, r))
+                try:
+                    os.link(sub, os.path.join(dst, r))
+                except FileExistsError:
+                    pass
 
     walk(src, "")
 
@@ -383,10 +395,7 @@ class ParquetIncrementalSink:
             return T.StructType.fromJson(json.load(f))
 
     def _is_partitioned(self, table: str) -> bool:
-        dp = self._data_path(table)
-        return dp is not None and any(
-            "=" in d for d in os.listdir(dp) if os.path.isdir(os.path.join(dp, d))
-        )
+        return bool(self._layout_partition_cols(table))
 
     def _read_raw(self, table: str) -> DataFrame:
         """Read the current snapshot with partition values kept as RAW
@@ -441,26 +450,45 @@ class ParquetIncrementalSink:
 
     # --- snapshot writers -------------------------------------------------
 
-    def _atomic_write(self, df: DataFrame, table: str, schema: T.StructType | None = None) -> None:
-        stage, n = self._begin_write(table)
-        df.write.mode("overwrite").parquet(stage)
-        if schema is not None:
-            self._store_schema(table, schema)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
-
-    def _atomic_write_partitioned(
+    def _atomic_write(
         self,
         df: DataFrame,
         table: str,
-        schema: T.StructType,
-        partition_cols: tuple[str, ...],
-    ) -> None:
+        schema: T.StructType | None = None,
+        partition_cols: tuple[str, ...] | list[str] = (),
+        link: str | None = None,
+        meta: dict | None = None,
+    ) -> int:
+        """The sink's one commit path: write ``df`` as the next snapshot
+        of ``table`` (hive-partitioned by ``partition_cols``, if any)
+        and make it visible with one pointer flip. Returns the new
+        version.
+
+        ``link`` carries files of the current snapshot into the new one
+        as hard links: ``"all"`` keeps every file (an append),
+        ``"untouched"`` only the partitions ``df`` did not write (it
+        replaces the partitions it writes). ``meta`` is merged over the
+        carried commit metadata. A failed write removes its stage
+        instead of leaving it to the stale-grace GC."""
         stage, n = self._begin_write(table)
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
-        self._store_schema(table, schema)
+        try:
+            writer = df.write.mode("overwrite")
+            if partition_cols:
+                writer = writer.partitionBy(*partition_cols)
+            writer.parquet(stage)
+            if link is not None and n > 1:
+                skip = set()
+                if link == "untouched":
+                    skip = set(self._leaf_partition_dirs(stage, len(partition_cols)))
+                _link_tree(self._version_dir(table, n - 1), stage, skip_rels=skip)
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+        if schema is not None:
+            self._store_schema(table, schema)
         self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
+        self._commit_version(table, n, meta={**self._carry_meta(table), **(meta or {})})
+        return n
 
     @staticmethod
     def _leaf_partition_dirs(root: str, depth: int) -> list[str]:
@@ -483,18 +511,20 @@ class ParquetIncrementalSink:
 
     def _layout_partition_cols(self, table: str) -> list[str]:
         """Partition columns of an existing hive layout, read from the
-        first leaf dir's ``k=v`` path components."""
+        first leaf dir's ``k=v`` path components (none for a flat or
+        missing table)."""
         cols: list[str] = []
         d = self._data_path(table)
-        while True:
+        while d is not None:
             subs = [
                 n for n in os.listdir(d)
                 if "=" in n and os.path.isdir(os.path.join(d, n))
             ]
             if not subs:
-                return cols
+                break
             cols.append(subs[0].split("=", 1)[0])
             d = os.path.join(d, subs[0])
+        return cols
 
     def append_aligned(self, new_rows: DataFrame, table: str, schema: T.StructType) -> None:
         """S8: append with target-schema alignment (reorder, pad
@@ -509,18 +539,15 @@ class ParquetIncrementalSink:
         :meth:`delete_overlap_append`) follows the existing hive
         layout — a flat append there would mix layouts and break
         reads."""
-        aligned = align_to_schema(new_rows, schema)
-        partitioned = self._is_partitioned(table)
-        stage, n = self._begin_write(table)
-        if n > 1:
-            _link_tree(self._version_dir(table, n - 1), stage)
-        writer = aligned.write.mode("append")
-        if partitioned:
-            writer = writer.partitionBy(*self._layout_partition_cols(table))
-        writer.parquet(stage)
-        self._store_schema(table, schema)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
+        self._append(new_rows, table, schema)
+
+    def _append(
+        self, new_rows: DataFrame, table: str, schema: T.StructType, meta: dict | None = None
+    ) -> None:
+        self._atomic_write(
+            align_to_schema(new_rows, schema), table, schema,
+            self._layout_partition_cols(table), link="all", meta=meta,
+        )
 
     def delete_overlap_append(
         self,
@@ -570,98 +597,46 @@ class ParquetIncrementalSink:
                         f"round-trip it (folds into __HIVE_DEFAULT_PARTITION__)"
                     )
         if self._data_path(table) is None:
-            self._atomic_write_partitioned(new_aligned, table, schema, partition_cols)
+            self._atomic_write(new_aligned, table, schema, partition_cols)
             return
-        if not self._is_partitioned(table):
-            # One-time migration of a legacy unpartitioned table:
-            # full rewrite into the partitioned layout, then future
-            # loads are partition-scoped. Migrate the files under the
-            # version pointer FIRST — the read below is lazy, and the
-            # snapshot write that consumes it must not race the move.
-            self._migrate_legacy(table)
-            legacy = self.read(table, schema)
-            self._delete_overlap_full(
-                legacy, new_aligned, table, schema, ts_col, watermark,
-                partition_cols, pad_seconds,
-            )
-            return
-        cutoff = watermark - timedelta(seconds=pad_seconds)
-        # Partition cols read back as RAW strings (_read_raw); cast to
-        # the schema type BEFORE comparing so non-string keys match
-        # their hive encodings (str(True)='True' vs dir 'k=true',
-        # str(1e-07) vs '1.0E-7' — a string compare would silently
-        # match nothing and the new snapshot would drop pre-cutoff
-        # survivors).
+        # Move a legacy layout's files under the version pointer FIRST —
+        # the read below is lazy, and the snapshot write that consumes
+        # it must not race the move.
+        self._migrate_legacy(table)
+        partitioned = self._is_partitioned(table)
+        existing = self.read(table, schema)
+        # The batch's keys as ONE flat IN over a struct of the partition
+        # columns: Catalyst makes it a partition filter, and it stays
+        # one expression however many keys a load has (an OR per key
+        # nests one level per key and overflows the JVM stack at a few
+        # hundred). The literals are cast to the schema types, so
+        # non-string keys match their hive encodings (the partition
+        # values are read back as raw strings and cast by
+        # align_to_schema).
         types = {f.name: f.dataType for f in schema.fields}
-        raw = self._read_raw(table)
-        for k in partition_cols:
-            raw = raw.withColumn(k, F.col(k).cast(types[k]))
-        pred = None
-        for row in keys:
-            kc = None
-            for k in partition_cols:
-                kc_part = F.col(k).eqNullSafe(F.lit(row[k]).cast(types[k]))
-                kc = kc_part if kc is None else kc & kc_part
-            pred = kc if pred is None else pred | kc
+        in_batch = F.struct(*partition_cols).isin(
+            [
+                F.struct(*[F.lit(row[k]).cast(types[k]).alias(k) for k in partition_cols])
+                for row in keys
+            ]
+        )
         # coalesce: `ts >= cutoff` is NULL for NULL-ts rows and a bare
         # `~overlap` filter would silently drop them every load; the
         # reference DELETE (`ts >= cutoff`) keeps NULL-ts rows, so must we.
-        overlap = F.coalesce(F.col(ts_col) >= F.lit(cutoff), F.lit(False))
-        scoped = raw.filter(pred)  # partition-pruned scan (string keys cast is a no-op)
-        survivors = align_to_schema(scoped.filter(~overlap), schema)
-        staging = os.path.join(self._path(table), ".stage-" + uuid.uuid4().hex[:8])
-        survivors.unionByName(new_aligned).write.mode("overwrite").partitionBy(
-            *partition_cols
-        ).parquet(staging)
-        # Assemble the next snapshot IN A PRIVATE STAGE DIR: hard-link
-        # every untouched partition from the current one, move the
-        # freshly written touched partitions in, then claim v{n} with
-        # one atomic rename and flip the pointer once.
-        stage, n = self._begin_write(table)
-        touched = set(self._leaf_partition_dirs(staging, len(partition_cols)))
-        _link_tree(self._version_dir(table, n - 1), stage, skip_rels=touched)
-        for rel in touched:
-            dst = os.path.join(stage, rel)
-            if os.path.exists(dst):
-                shutil.rmtree(dst, ignore_errors=True)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(os.path.join(staging, rel), dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
-
-    def _delete_overlap_full(
-        self,
-        existing: DataFrame,
-        new_aligned: DataFrame,
-        table: str,
-        schema: T.StructType,
-        ts_col: str,
-        watermark: datetime,
-        partition_cols: tuple[str, ...],
-        pad_seconds: float,
-    ) -> None:
-        """Legacy full-rewrite path (also the partitioned-layout
-        migration): same semantics, whole-snapshot rewrite."""
         cutoff = watermark - timedelta(seconds=pad_seconds)
-        keys = new_aligned.select(*partition_cols).distinct()
         overlap = F.coalesce(F.col(ts_col) >= F.lit(cutoff), F.lit(False))
-        in_batch = None
-        for k in partition_cols:
-            c = F.col(f"__k_{k}").isNotNull()
-            in_batch = c if in_batch is None else (in_batch & c)
-        tagged = existing.join(
-            F.broadcast(
-                keys.select(*[F.col(k).alias(f"__k_{k}") for k in partition_cols])
-            ),
-            [existing[k].eqNullSafe(F.col(f"__k_{k}")) for k in partition_cols],
-            "left",
-        )
-        survivors = tagged.filter(~(in_batch & overlap)).select(
-            *[f.name for f in schema.fields]
-        )
-        self._atomic_write_partitioned(
-            survivors.unionByName(new_aligned), table, schema, partition_cols
+        if partitioned:
+            # partition-pruned scan of the batch's partitions; every
+            # other partition is hard-linked into the new snapshot
+            survivors = existing.filter(in_batch & ~overlap)
+            link = "untouched"
+        else:
+            # one-time migration of an unpartitioned table: a full
+            # rewrite into the partitioned layout
+            survivors = existing.filter(~(in_batch & overlap))
+            link = None
+        self._atomic_write(
+            survivors.unionByName(new_aligned), table, schema, partition_cols, link=link
         )
 
     def merge_dedup_overwrite(
@@ -675,14 +650,7 @@ class ParquetIncrementalSink:
         are kept; everything else comes from the batch (reference
         R:556-585 anti-join + rewrite). ``key`` may be composite —
         (BRANDCODE, Server) when several sites share the master table."""
-        keys = [key] if isinstance(key, str) else list(key)
-        new_aligned = align_to_schema(new_rows, schema).dropDuplicates(keys)
-        existing = self.read(table, schema)
-        if existing is None:
-            self._atomic_write(new_aligned, table, schema)
-            return
-        keep = existing.join(new_aligned.select(*keys), keys, "left_anti")
-        self._atomic_write(keep.unionByName(new_aligned), table, schema)
+        self._replace_by_key(new_rows, table, schema, [key] if isinstance(key, str) else list(key))
 
     def upsert_script_data(
         self,
@@ -694,13 +662,19 @@ class ParquetIncrementalSink:
         """S11: insert-or-replace state rows per (System, Server)
         (reference R:236-282 insert, :502-546 update). Delta
         equivalent: MERGE on the key."""
-        new_aligned = align_to_schema(new_rows, schema).dropDuplicates(list(keys))
+        self._replace_by_key(new_rows, table, schema, list(keys))
+
+    def _replace_by_key(
+        self, new_rows: DataFrame, table: str, schema: T.StructType, keys: list[str]
+    ) -> None:
+        """Rows of the batch (one per key) replace the table's rows with
+        the same key; the others are kept."""
+        new_aligned = align_to_schema(new_rows, schema).dropDuplicates(keys)
         existing = self.read(table, schema)
-        if existing is None:
-            self._atomic_write(new_aligned, table, schema)
-            return
-        keep = existing.join(new_aligned.select(*keys), list(keys), "left_anti")
-        self._atomic_write(keep.unionByName(new_aligned), table, schema)
+        if existing is not None:
+            keep = existing.join(new_aligned.select(*keys), keys, "left_anti")
+            new_aligned = keep.unionByName(new_aligned)
+        self._atomic_write(new_aligned, table, schema)
 
     def maintain_rollup(
         self,
@@ -960,23 +934,12 @@ class ParquetIncrementalSink:
         df = self.read(table)
         if df is None:
             raise ValueError(f"{table}: nothing to compact")
-        schema = self._stored_schema(table)
-        pcols = self._layout_partition_cols(table) if self._is_partitioned(table) else []
-        stage, n = self._begin_write(table)
+        pcols = self._layout_partition_cols(table)
         if pcols:
-            (
-                df.repartition(target_files, *[F.col(c) for c in pcols])
-                .write.mode("overwrite")
-                .partitionBy(*pcols)
-                .parquet(stage)
-            )
+            df = df.repartition(target_files, *pcols)
         else:
-            df.coalesce(target_files).write.mode("overwrite").parquet(stage)
-        if schema is not None:
-            self._store_schema(table, schema)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
-        return n
+            df = df.coalesce(target_files)
+        return self._atomic_write(df, table, self._stored_schema(table), pcols)
 
     def _carry_meta(self, table: str) -> dict:
         """Commit metadata that must survive unrelated commits (e.g.
@@ -1017,22 +980,6 @@ class ParquetIncrementalSink:
         def append_batch(batch_df: DataFrame, batch_id: int) -> None:
             if batch_id <= self.last_stream_batch(table, query_id):
                 return  # replay of a committed batch
-            aligned = align_to_schema(batch_df, schema)
-            partitioned = self._is_partitioned(table)
-            stage, n = self._begin_write(table)
-            if n > 1:
-                _link_tree(self._version_dir(table, n - 1), stage)
-            if partitioned:
-                # follow the existing hive layout — a flat append would
-                # mix leaf depths and break partition discovery
-                pcols = self._layout_partition_cols(table)
-                aligned.write.mode("append").partitionBy(*pcols).parquet(stage)
-            else:
-                aligned.write.mode("append").parquet(stage)
-            self._store_schema(table, schema)
-            self._publish(table, stage, n)
-            meta = self._carry_meta(table)
-            meta[f"stream_batch:{query_id}"] = batch_id
-            self._commit_version(table, n, meta=meta)
+            self._append(batch_df, table, schema, meta={f"stream_batch:{query_id}": batch_id})
 
         return append_batch

@@ -86,12 +86,20 @@ _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def _path_fingerprint(path: str) -> tuple:
-    """(path, mtime_ns, size) of a parquet file or, for a directory
-    dataset, of the directory entry itself (mtime bumps when files are
-    added/replaced) — cheap stat-level identity for the schema cache."""
+    """Cheap stat-level identity for the schema cache: (path, mtime_ns,
+    size) of a parquet file or, for a directory dataset, of every file
+    under it. A directory's own mtime is not enough: regenerating a
+    file inside a nested partition dir leaves the top dir untouched."""
     try:
-        st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (path, st.st_mtime_ns, st.st_size)
+        files = []
+        for d, _, names in os.walk(path):
+            for n in names:
+                st = os.stat(os.path.join(d, n))
+                files.append((os.path.join(d, n), st.st_mtime_ns, st.st_size))
+        return (path, tuple(sorted(files)))
     except OSError:
         return (path, None, None)
 
@@ -142,16 +150,16 @@ def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
     the identical 10 views on every SQL-surface query re-paid ~0.3 s of
     reader construction per call for no semantic effect. Re-registers
     whenever ``sf_dir`` changes so multi-fixture runners stay correct,
-    and re-verifies one sentinel view against the live catalog so a
-    user-dropped view never stays silently missing (ADVICE r15).
+    and re-verifies every view against the live catalog so a
+    user-dropped view never stays silently missing.
     """
     sf_dir = sf_dir or DEFAULT_SF_DIR
     if _REGISTERED_VIEWS.get(spark) == sf_dir:
-        # trust-but-verify: the registry says views exist — confirm one
-        # against the session catalog (cheap metadata lookup) in case a
-        # caller dropped temp views since registration.
+        # trust-but-verify: the registry says views exist — confirm
+        # them against the session catalog (cheap metadata lookups) in
+        # case a caller dropped temp views since registration.
         try:
-            if spark.catalog.tableExists(TABLES[0]):
+            if all(spark.catalog.tableExists(name) for name in TABLES):
                 return
         except Exception:
             pass

@@ -955,3 +955,66 @@ def test_read_dim_as_of_reconstructs_history(spark, tmp_path):
     assert at(T0 + timedelta(hours=1)) == {"A": "red", "B": "blue"}   # before change
     assert at(t1) == {"A": "green", "B": "blue", "C": "black"}        # boundary: new version effective AT t1
     assert at(T0 - timedelta(hours=1)) == {}                          # nothing yet
+
+
+def test_delete_overlap_many_keys_one_predicate(spark, tmp_path):
+    """A batch with 500 distinct (LINE, Server) keys: the delete scope
+    is one flat IN over the partition columns, so it plans as one
+    partition filter instead of a 500-deep OR chain (which overflowed
+    the JVM stack), and untouched partitions stay hard links."""
+    sink = ParquetIncrementalSink(spark, str(tmp_path))
+    wm = T0 - timedelta(minutes=30)
+    keys = [(f"L{i:03d}", s) for i in range(250) for s in ("S1", "S2")]
+    untouched = [(f"U{i}", "S1") for i in range(3)]
+    seed = _rows(
+        spark,
+        [(f"old-{ln}-{s}", ln, -120, 1.0, s) for ln, s in keys]
+        + [(f"ovl-{ln}-{s}", ln, 0, 2.0, s) for ln, s in keys]
+        + [(f"u-{ln}", ln, 0, 3.0, s) for ln, s in untouched],
+    )
+    sink.delete_overlap_append(seed, "co", CO_SCHEMA, "CO_StartTime", watermark=wm - timedelta(days=1))
+    before = {
+        ln: _partition_file_stats(sink._data_path("co"), f"LINE={ln}/Server={s}")
+        for ln, s in untouched
+    }
+    assert all(before.values())
+
+    batch = _rows(spark, [(f"new-{ln}-{s}", ln, 5, 4.0, s) for ln, s in keys])
+    sink.delete_overlap_append(batch, "co", CO_SCHEMA, "CO_StartTime", watermark=wm)
+
+    got = _collect(sink, "co")
+    want = sorted(
+        [(f"old-{ln}-{s}", ln, 1.0) for ln, s in keys]
+        + [(f"new-{ln}-{s}", ln, 4.0) for ln, s in keys]
+        + [(f"u-{ln}", ln, 3.0) for ln, _ in untouched]
+    )
+    assert got == want
+    for ln, s in untouched:
+        assert _partition_file_stats(sink._data_path("co"), f"LINE={ln}/Server={s}") == before[ln]
+
+
+@pytest.mark.parametrize("writer", ["append_aligned", "delete_overlap_append"])
+def test_failed_write_removes_stage_and_keeps_pointer(spark, tmp_path, writer):
+    """A write that fails inside the commit path leaves no private
+    stage behind and does not move the version pointer."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    sink = ParquetIncrementalSink(spark, str(tmp_path))
+    sink.delete_overlap_append(
+        _rows(spark, [("a", "L1", 0, 1.0, "S")]), "co", CO_SCHEMA, "CO_StartTime",
+        watermark=T0 - timedelta(days=1),
+    )
+    version = sink._current_version("co")
+    bad = _rows(spark, [("b", "L1", 5, 2.0, "S")]).withColumn(
+        "CO_DOWNTIME", F.raise_error(F.lit("injected write failure"))
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        if writer == "append_aligned":
+            sink.append_aligned(bad, "co", CO_SCHEMA)
+        else:
+            sink.delete_overlap_append(bad, "co", CO_SCHEMA, "CO_StartTime", watermark=T0)
+    assert [e for e in os.listdir(sink._path("co")) if e.startswith(".stage-")] == []
+    assert sink._current_version("co") == version
+    assert _collect(sink, "co") == [("a", "L1", 1.0)]

@@ -184,3 +184,27 @@ def test_concurrent_sites_shared_tables_no_lost_updates(spark, tmp_path):
     assert {r.Server for r in co} == {"S0", "S1", "S2"}
     sd = sink.read("Script_Data").collect()
     assert {r.Server for r in sd} == {"S0", "S1", "S2"}
+
+
+def test_parallel_sites_leave_session_conf_alone(spark):
+    """Sites build their plans concurrently on one session; none of
+    them may change a session-wide SQL conf the caller set. A racy
+    save/restore leaves the wrong value only in some interleavings, so
+    the run is repeated."""
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        for _ in range(3):
+            runs = [
+                SiteRun(SiteParams(server=f"S{i}"), _dt(spark, f"L{i}")) for i in range(3)
+            ]
+            log = run_all_sites(runs, lambda s, o: o["CO_Aggregated_Data"].count(),
+                                max_parallel_sites=3)
+            assert all(v == "Success" for v in log.values())
+            assert spark.conf.get(key) == "true"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

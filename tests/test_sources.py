@@ -639,3 +639,40 @@ def test_sharepoint_config_frames_drop_metadata_and_type(spark, tmp_path):
     assert row.Server == "SRV1"
     assert row.CO_Trigger_Parameter == 12.5  # string in the payload
     assert dict(cfg.dtypes)["CO_Trigger_Parameter"] == "double"
+
+
+def test_schema_cache_sees_file_regenerated_in_nested_partition(spark, tmp_path):
+    """Regenerating a file inside a nested partition dir changes the
+    dataset's fingerprint, so load_table re-infers its schema."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fhc_rco_etl_scalable_spark.sources.parquet import load_table
+
+    top = tmp_path / "t.parquet"
+    part = top / "k=a"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"x": [1]}), str(part / "f.parquet"))
+    assert load_table(spark, "t", str(tmp_path)).columns == ["x", "k"]
+    st_top, st_part = os.stat(top), os.stat(part)
+    pq.write_table(pa.table({"x": [1], "y": [2]}), str(part / "f.parquet"))
+    # regenerated in place: neither directory entry records the change
+    os.utime(top, ns=(st_top.st_atime_ns, st_top.st_mtime_ns))
+    os.utime(part, ns=(st_part.st_atime_ns, st_part.st_mtime_ns))
+    df = load_table(spark, "t", str(tmp_path))
+    assert df.columns == ["x", "y", "k"]
+    assert df.collect()[0].y == 2
+
+
+def test_register_views_restores_any_dropped_view(spark):
+    """register_views re-registers when ANY harness view was dropped,
+    not only the first one."""
+    from conftest import SF_DIR
+    from fhc_rco_etl_scalable_spark.sources.parquet import TABLES, register_views
+
+    register_views(spark, SF_DIR)
+    spark.catalog.dropTempView(TABLES[-1])
+    register_views(spark, SF_DIR)
+    assert all(spark.catalog.tableExists(n) for n in TABLES)
